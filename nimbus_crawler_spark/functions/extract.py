@@ -96,7 +96,7 @@ class _TreeBuilder(HTMLParser):
 # strict domain, and any page it cannot prove falls back to the always-
 # correct path. Differential tests (tests/test_extract.py) pin fast≡stdlib
 # over the bench corpora, the ported reference vectors, and adversarial
-# inputs. Env NIMBUS_FAST_HTML=0 disables the fast path entirely.
+# inputs.
 #
 # Strict domain (each rule STRICTER than the stdlib's tolerant grammar, so
 # a fast-path match can never read differently than the stdlib would):
@@ -112,11 +112,8 @@ class _TreeBuilder(HTMLParser):
 # Charrefs in data and attribute values go through the same html.unescape
 # the stdlib applies (skipped when no '&' is present — identity).
 
-import os as _os
 import re as _re
 from html import unescape as _unescape
-
-_FAST_HTML = _os.environ.get("NIMBUS_FAST_HTML", "1") != "0"
 
 # tag-name charset = stdlib tagfind_tolerant's; end-tag = stdlib endtagfind
 # bare values must not BEGIN with '=' (the stdlib's '=+' folds 'a==b' into
@@ -144,15 +141,9 @@ _CDATA_CLOSE_RE = {
 def _fast_feed(out, html: str) -> bool:
     """Tokenize ``html`` into ``out`` (any object with the HTMLParser
     handle_* callbacks); False = input left the strict domain (caller must
-    discard ``out`` and use the stdlib parser).
-
-    ``out.attr_tags`` (optional frozenset) limits attribute PARSING to those
-    tags — safe only for consumers that ignore other tags' attributes
-    entirely (the streaming extractor reads attrs of ``a`` alone); the
-    attrs substring was already shape-validated by the start-tag regex."""
+    discard ``out`` and use the stdlib parser)."""
     if "<!" in html or "<?" in html:
         return False
-    want = getattr(out, "attr_tags", None)
     pos, n = 0, len(html)
     find = html.find
     while pos < n:
@@ -177,7 +168,7 @@ def _fast_feed(out, html: str) -> bool:
         tag = m.group(1).lower()
         attrs_s = m.group(2)
         attrs: list[tuple[str, str | None]] = []
-        if attrs_s and (want is None or tag in want):
+        if attrs_s:
             covered = 0
             for am in _FAST_ATTR_RE.finditer(attrs_s):
                 if am.start() != covered:
@@ -220,10 +211,16 @@ def parse_html(html: str | bytes) -> _Node:
     is always UTF-8, FIXTURES.md §1)."""
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
-    if _FAST_HTML:
-        tb = _TreeBuilder()
-        if _fast_feed(tb, html):
-            return tb.root
+    tb = _TreeBuilder()
+    if _fast_feed(tb, html):
+        return tb.root
+    return _stdlib_tree(html)
+
+
+def _stdlib_tree(html: str) -> _Node:
+    """Document tree from the stdlib tokenizer alone — the fallback for input
+    outside the fast grammar, and the semantic reference the fast paths are
+    tested against."""
     tb = _TreeBuilder()
     tb.feed(html)
     tb.close()
@@ -282,7 +279,12 @@ def extract_text(html: str | bytes) -> str:
     Unit vectors ported from extractor_test.go:19-75 in
     tests/test_extract.py.
     """
-    root = parse_html(html)
+    return _tree_text(parse_html(html))
+
+
+def _tree_text(root: _Node) -> str:
+    """Per-body trimmed text of ``root`` after removing script/style/
+    noscript/iframe subtrees (mutates ``root``)."""
     _remove_tags(root, _REMOVED_TAGS)
     out: list[str] = []
     for body in _body_nodes(root):
@@ -292,99 +294,31 @@ def extract_text(html: str | bytes) -> str:
     return "".join(out)
 
 
-class _StreamExtractor:
-    """Single-pass consumer of ``_fast_feed`` computing parse_page's output
-    without materializing a tree: hrefs of every ``a`` in document order
-    (the pre-removal tree — reference extracts links before ExtractText
-    mutates, parser.go:140-144) and per-``body`` descendant text with
-    script/style/noscript/iframe subtrees excluded. Tree-semantics mirror,
-    pinned equal to the tree path by tests/test_extract.py:
-
-    * self-nesting closers and void elements follow _TreeBuilder exactly;
-    * an end tag closes up to the nearest matching open frame (frames
-      closed in between release their body buffers / removal depth);
-    * nested bodies each collect their own subtree's text (data lands in
-      every active buffer), duplicated exactly as _find_all's recursion
-      into matched nodes duplicates it;
-    * a body inside a removed subtree never opens a buffer (the tree path
-      prunes it before body collection);
-    * no ``body`` at EOF → the caller must fall back to the tree path's
-      virtual-body construction (``bodies`` stays empty).
-    """
-
-    __slots__ = ("stack", "bodies", "active", "removed_depth", "hrefs")
-    attr_tags = frozenset({"a"})
-
-    def __init__(self) -> None:
-        self.stack: list[tuple[str, int, bool]] = []  # (tag, body_idx|-1, removed)
-        self.bodies: list[list[str]] = []
-        self.active: list[int] = []
-        self.removed_depth = 0
-        self.hrefs: list[str] = []
-
-    def _note_anchor(self, attrs) -> None:
-        for k, v in attrs:
-            if k == "href":
-                self.hrefs.append(v if v is not None else "")
-                return
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _SELF_NESTING_CLOSERS and self.stack and self.stack[-1][0] == tag:
-            self._pop_frame()
-        if tag == "a":
-            self._note_anchor(attrs)
-        if tag in _VOID_ELEMENTS:
-            return
-        body_idx = -1
-        if tag == "body" and self.removed_depth == 0:
-            body_idx = len(self.bodies)
-            self.bodies.append([])
-            self.active.append(body_idx)
-        removed = tag in _REMOVED_TAGS
-        if removed:
-            self.removed_depth += 1
-        self.stack.append((tag, body_idx, removed))
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if tag == "a":
-            self._note_anchor(attrs)
-        if tag == "body" and self.removed_depth == 0:
-            self.bodies.append([])  # empty body node: contributes ""
-
-    def handle_endtag(self, tag: str) -> None:
-        for i in range(len(self.stack) - 1, -1, -1):
-            if self.stack[i][0] == tag:
-                while len(self.stack) > i:
-                    self._pop_frame()
-                return
-
-    def _pop_frame(self) -> None:
-        _tag, body_idx, removed = self.stack.pop()
-        if removed:
-            self.removed_depth -= 1
-        if body_idx >= 0:
-            self.active.pop()
-
-    def handle_data(self, data: str) -> None:
-        if data and self.active and self.removed_depth == 0:
-            for bi in self.active:
-                self.bodies[bi].append(data)
-
-
 def _stream_parse(html: str) -> tuple[list[list[str]], list[str]] | None:
-    """``_fast_feed`` ⊕ ``_StreamExtractor`` fused into ONE loop — the
-    mega-round parse kernel's hot path. The class pipeline dispatches ~4
-    Python calls per tag (match → handle_* → _pop_frame); at ~130 tags/page
-    that dispatch was the single largest cost of ``parse_page`` (profiled:
-    1.5M calls / 4k pages). This function keeps all tokenizer+extractor
-    state in locals and inlines every callback body VERBATIM, so its
-    output is the class pipeline's by construction; equivalence is pinned
-    over the corpus, the adversarial vectors, and raw-character fuzz by
-    tests/test_extract.py.
+    """``_fast_feed``'s tokenizer fused with a tree-free extractor in ONE
+    loop — the mega-round parse kernel's hot path. All tokenizer+extractor
+    state lives in locals (a callback-object pipeline dispatches ~4 Python
+    calls per tag, the single largest cost of ``parse_page`` when profiled:
+    1.5M calls / 4k pages). It computes what the tree path reads off a
+    ``_TreeBuilder`` tree:
 
-    Returns ``(bodies, hrefs)`` exactly as ``_StreamExtractor`` would hold
-    them, or None when the input leaves the strict fast domain (caller must
-    fall back to the stdlib tree path)."""
+    * hrefs of every ``a`` in document order, from the pre-removal tree
+      (the reference extracts links before ExtractText mutates,
+      parser.go:140-144); first ``href`` per tag wins, a bare one reads "";
+    * per-``body`` descendant text with script/style/noscript/iframe
+      subtrees excluded; nested bodies each collect their own subtree's
+      text (duplicated exactly as ``_find_all``'s recursion duplicates it),
+      and a body inside a removed subtree never opens a buffer;
+    * self-nesting closers, void elements and end tags (close up to the
+      nearest matching open frame, stray ones ignored) follow
+      ``_TreeBuilder`` exactly.
+
+    Returns ``(bodies, hrefs)``, or None when the input leaves the strict
+    fast domain — exactly when ``_fast_feed`` refuses. No ``body`` at all
+    leaves ``bodies`` empty: the caller then needs the tree path's
+    virtual-body construction. Equivalence with the stdlib tree path is
+    pinned over the corpus, adversarial vectors and fuzz by
+    tests/test_extract.py."""
     if "<!" in html or "<?" in html:
         return None
     stack: list[tuple[str, int, bool]] = []  # (tag, body_idx|-1, removed)
@@ -441,8 +375,8 @@ def _stream_parse(html: str) -> tuple[list[list[str]], list[str]] | None:
             return None
         tag, attrs_s, selfclose = m.group(1, 2, 3)
         tag = tag.lower()
-        # attrs parsed (and span-validated) for <a> only, exactly like the
-        # class path's attr_tags = {"a"}; first href wins, None value → ""
+        # attrs parsed (and span-validated) for <a> only — no other tag's
+        # attributes are read; first href wins, None value → ""
         href = None
         have_href = False
         if tag == "a":
@@ -507,34 +441,31 @@ def _stream_parse(html: str) -> tuple[list[list[str]], list[str]] | None:
 
 
 def parse_page(html: str | bytes, base_url: str) -> tuple[str, list[str] | None]:
-    """One-pass parse stage: links then text off a SINGLE tree — the
+    """One-pass parse stage: links then text off a SINGLE parse — the
     reference's exact flow (parser.go:131-144: goquery doc parsed once,
     ExtractURLs before ExtractText mutates it). Halves the per-page cost of
     the dominant pandas UDF vs parsing twice.
 
     Hot path: the fused streaming extractor above (no tree, no per-event
     dispatch) whenever the fast tokenizer accepts the page AND at least one
-    ``body`` exists; anything else re-parses through the tree path below."""
-    if _FAST_HTML:
-        h = html
-        if isinstance(h, (bytes, bytearray)):
-            h = bytes(h).decode("utf-8", errors="replace")
-        sp = _stream_parse(h)
-        if sp is not None and sp[0]:
-            bodies, hrefs = sp
-            return (
-                "".join("".join(b).strip() for b in bodies),
-                _process_hrefs(base_url, hrefs),
-            )
-    root = parse_html(html)
+    ``body`` exists; anything else goes through ``_page_from_tree``."""
+    if isinstance(html, (bytes, bytearray)):
+        html = bytes(html).decode("utf-8", errors="replace")
+    sp = _stream_parse(html)
+    if sp is not None and sp[0]:
+        bodies, hrefs = sp
+        return (
+            "".join("".join(b).strip() for b in bodies),
+            _process_hrefs(base_url, hrefs),
+        )
+    return _page_from_tree(parse_html(html), base_url)
+
+
+def _page_from_tree(root: _Node, base_url: str) -> tuple[str, list[str] | None]:
+    """``parse_page`` off a built tree (mutates ``root``): links first, then
+    text. Tests call it on ``_stdlib_tree`` as the semantic reference."""
     links = _links_from_tree(root, base_url)
-    _remove_tags(root, _REMOVED_TAGS)
-    out: list[str] = []
-    for body in _body_nodes(root):
-        sb: list[str] = []
-        _text_of(body, sb)
-        out.append("".join(sb).strip())
-    return "".join(out), links
+    return _tree_text(root), links
 
 
 def _links_from_tree(root: _Node, base_url: str) -> list[str] | None:

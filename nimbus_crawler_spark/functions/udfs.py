@@ -9,7 +9,6 @@ appear here (SURVEY.md §4.3.5).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -102,12 +101,3 @@ def html_key_udf(urls: pd.Series) -> pd.Series:
 @pandas_udf(T.StringType())
 def text_key_udf(urls: pd.Series) -> pd.Series:
     return urls.map(_keys.text_key)
-
-
-def url_hash_col(url_col: str = "url"):
-    """Deterministic 64-bit key replacing the reference's UUID pk (SURVEY §1.2)."""
-    return F.xxhash64(F.col(url_col))
-
-
-def bucket_col(n_buckets: int, url_col: str = "url"):
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")

@@ -182,5 +182,5 @@ def bm25_topk(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    w = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(1))).orderBy(F.desc("score"), F.asc("doc_id"))  # constant-0 partition (non-foldable): same single-task semantics over <=k post-limit rows, no WindowExec WARN
+    w = Window.partitionBy(F.pmod(F.xxhash64("doc_id"), F.lit(1))).orderBy(F.desc("score"), F.asc("doc_id"))  # constant-0 partition (non-foldable): same single-task semantics over <=k post-limit rows, no WindowExec WARN
     return scored.withColumn("rank", F.row_number().over(w))

@@ -18,6 +18,15 @@ Scale notes (the point of each design):
 * SimHash: 32-bit fingerprint via per-hex-char votes — a single groupBy(doc)
   aggregation; Hamming-near pairs then join on band keys, never all-pairs.
 * shingle Jaccard — exact verification restricted to candidate pairs.
+* compute-once pins — a subtree consumed by MULTIPLE downstream branches
+  (both sides of a self-join, candidate generation + verify) is
+  ``localCheckpoint(eager=True)``'d. Without it Spark plans the subtree once
+  per consumer; static exchange reuse only collapses canonically-identical
+  exchanges, and the verified r2 plans showed the SimHash fingerprint
+  aggregation executed per band side (8×) and the MinHash signature
+  aggregation per self-join side (2×). The pinned tables are small (one row
+  per document or per shingle), so every consumer plans against the stored
+  result instead.
 """
 
 from __future__ import annotations
@@ -26,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _spread(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Give CPU-heavy per-row expansions (shingle explode × k hashes) full
     cluster parallelism even when the input is a small one-file scan — a
     single-row-group parquet otherwise pins the whole operator to ONE task.
@@ -35,10 +44,6 @@ def _spread(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
     no RDD conversion, no job): a 100 TB table has file count ≫ core count,
     so this is a no-op there and the extra shuffle is never paid at scale;
     non-file inputs (already shuffled/derived frames) pass through untouched.
-    Additionally gated on the plan's size estimate (r6): a SINGLE file over
-    ``max_bytes`` is already scan-parallel via byte-range splits
-    (``spark.sql.files.maxPartitionBytes``), so repartitioning it would pay
-    a large shuffle for parallelism the scan gets free.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -47,32 +52,7 @@ def _spread(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
         n_files = 0
     if not (0 < n_files < target):
         return df
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = 0
-    if size > max_bytes:
-        return df
     return df.repartition(target)
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Compute-once pin for a subtree consumed by MULTIPLE downstream
-    branches (both sides of a self-join, candidate generation + verify).
-
-    Without it Spark plans the subtree once per consumer; static exchange
-    reuse only collapses canonically-identical exchanges, and the verified r2
-    plans showed the SimHash fingerprint aggregation executed per band side
-    (8×) and the MinHash signature aggregation per self-join side (2×) — an
-    8×/2× tax on the heaviest aggregation at corpus scale. ``localCheckpoint``
-    materializes the (small: one row per doc) signature/fingerprint table
-    once; every consumer then plans against the stored result. Disable with
-    NIMBUS_DEDUP_MAT=0 to get the pure-lazy plan back."""
-    import os
-
-    if os.environ.get("NIMBUS_DEDUP_MAT", "1") == "0":
-        return df
-    return df.localCheckpoint(eager=True)
 
 
 def _tokens(text: Column) -> Column:
@@ -134,11 +114,6 @@ def first_wins(df: DataFrame, key: Column | str, id_col: str = "doc_id") -> Data
     )
 
 
-def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """First-wins survivor set (analog of crawl content dedup D3)."""
-    return first_wins(docs, F.md5(F.col(text_col)), id_col)
-
-
 def minhash_signatures_wide(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -173,23 +148,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, perm, sig): long-form view of ``minhash_signatures_wide``."""
-    wide = minhash_signatures_wide(docs, num_hashes, shingle_n, id_col, text_col)
-    return wide.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"s{i}") for i in range(num_hashes)])).alias(
-            "perm", "sig"
-        ),
-    )
-
-
 def minhash_lsh_candidates(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -203,13 +161,13 @@ def minhash_lsh_candidates(
     Band keys are projected straight off the wide signature row (md5 of the
     band's sigs in perm order) — no second aggregation shuffle; the only
     shuffles are the signature groupBy and the bucket self-join. The wide
-    signature table is materialized once (``_materialize``) so the
-    shingle-explode + k-min aggregation — the dominant cost at corpus scale —
-    is computed exactly once, not once per self-join side."""
+    signature table is checkpointed once so the shingle-explode + k-min
+    aggregation — the dominant cost at corpus scale — is computed exactly
+    once, not once per self-join side."""
     rows_per_band = num_hashes // bands
-    wide = _materialize(
-        minhash_signatures_wide(docs, num_hashes, shingle_n, id_col, text_col)
-    )
+    wide = minhash_signatures_wide(
+        docs, num_hashes, shingle_n, id_col, text_col
+    ).localCheckpoint(eager=True)
     band_structs = F.array(
         *[
             F.struct(
@@ -241,11 +199,14 @@ def shingle_sets(
 ) -> DataFrame:
     """(_id, _sh, _n_sh): materialized distinct-shingle set per document —
     computed once and shared by candidate generation and exact verification."""
-    return _materialize(
-        _spread(docs).select(
+    return (
+        _spread(docs)
+        .select(
             F.col(id_col).alias("_id"),
             F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
-        ).withColumn("_n_sh", F.size("_sh"))
+        )
+        .withColumn("_n_sh", F.size("_sh"))
+        .localCheckpoint(eager=True)
     )
 
 
@@ -381,11 +342,11 @@ def simhash_near_pairs(
     over ``bands`` bands ⇒ some band equal when bands > max_hamming), then
     exact Hamming verify via bit_count(xor).
 
-    The fingerprint table is materialized once (``_materialize``); all band
-    keys are projected off it in ONE explode (mirroring the MinHash
-    ``band_structs`` shape) — the token-explode + vote aggregation, the
-    dominant cost at corpus scale, is computed exactly once rather than once
-    per band side (8× in the pre-materialization plan).
+    The fingerprint table is checkpointed once; all band keys are projected
+    off it in ONE explode (mirroring the MinHash ``band_structs`` shape) —
+    the token-explode + vote aggregation, the dominant cost at corpus scale,
+    is computed exactly once rather than once per band side (8× in the
+    pre-materialization plan).
 
     First-matching-band emission (r6): a pair agreeing in k bands used to be
     emitted k times and collapsed by a ``distinct`` — on a near-dup-dense
@@ -395,7 +356,7 @@ def simhash_near_pairs(
     require all LOWER bands to differ — each pair then leaves the join
     exactly once (from its minimal agreeing band) and the distinct exchange
     disappears from the plan. Result set is identical by construction."""
-    fps = _materialize(simhash_fingerprints(docs, id_col, text_col, bits))
+    fps = simhash_fingerprints(docs, id_col, text_col, bits).localCheckpoint(eager=True)
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
 
@@ -466,9 +427,7 @@ def ngram_jaccard_pairs(
     # `shingle`, so the following groupBy reuses that exchange. The (a<b)
     # pair combinations are then emitted JVM-side from the bounded array with
     # nested `transform` — no rare-shingle self-join shuffle.
-    dfc = _materialize(
-        sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    )
+    dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df")).localCheckpoint(eager=True)
     rare = dfc.where((F.col("_df") >= 2) & (F.col("_df") <= max_doc_freq)).select("shingle")
     holders = (
         sh.join(rare, "shingle", "left_semi")

@@ -19,7 +19,7 @@ from ..config import CrawlConfig
 from ..schemas import DOMAINS_SCHEMA, URL_STATE_SCHEMA
 from ..sources.seeds import parse_seed_lines
 from ..store import SnapshotStore
-from .round import run_round
+from .round import fetched_ok, run_round
 
 SEED_ROUND = -1
 
@@ -112,11 +112,7 @@ def crawl(
             # cross-round content-dedup scan on the strength of an invariant
             # ("parsed row ⇒ fetched_total > 0") the marker can't vouch for —
             # derive the truth from state instead (one scan, resume-only)
-            ft = (
-                store.read("url_state")
-                .where(F.col("status") == "parsed")
-                .count()
-            )
+            ft = store.read("url_state").where(fetched_ok()).count()
         fetched_total = int(ft)
     else:
         if seeds_text is None:

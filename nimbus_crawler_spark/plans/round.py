@@ -17,11 +17,18 @@ becomes, per round r:
 Everything except the pandas-UDF kernels stays in whole-stage codegen:
 sha2, xxhash64, window ranks, joins, explode are all JVM-side expressions.
 Column pruning pushes the ``pages`` scan down to (url, html, lang) only.
+
+Round-scoped intermediates are pinned with ``localCheckpoint(eager=True)``:
+one planning pass up front, after which every consumer plans against a tiny
+LogicalRDD (A/B'd fastest against lazy checkpoints and ``persist``, which
+re-analyzes the full tree on every action). The blocks are released by the
+ContextCleaner once the checkpointed RDDs are garbage-collected on the
+driver, which bounds executor storage across a long crawl.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -52,6 +59,16 @@ def _with_keys(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def fetched_ok() -> Column:
+    """url_state rows whose page was fetched: parsed, or a content-dup skip
+    (dups keep their ``html_key``; robots-denied skips never get one). The
+    per-round ``n_fetched`` counter and the resume fallback both count this,
+    so ``fetched_total`` always equals the number of matching state rows."""
+    return (F.col("status") == "parsed") | (
+        (F.col("status") == "skipped") & F.col("html_key").isNotNull()
+    )
+
+
 def _backoff_rounds_expr(retry, cfg: CrawlConfig):
     """Column mirror of functions/backoff.backoff_rounds — same IEEE-double
     op order (base + (jitter·0.5)·base, ·1000.0, /round_ms, ceil, min 1) so
@@ -59,20 +76,6 @@ def _backoff_rounds_expr(retry, cfg: CrawlConfig):
     base = F.pow(F.lit(2.0), retry)
     secs = base + F.lit(cfg.backoff_jitter * 0.5) * base
     return F.greatest(F.lit(1), F.ceil(secs * 1000.0 / cfg.round_ms))
-
-
-def _mat(df: DataFrame) -> DataFrame:
-    """Materialization strategy for round-scoped intermediates (A/B'd on this
-    host): 'eager' localCheckpoint pays one planning pass up front and every
-    consumer then plans against a tiny LogicalRDD — measured fastest; 'lazy'
-    defers the pass; 'persist' skips lineage truncation (slowest: every
-    action re-analyzes the full tree). Env NIMBUS_ROUND_MAT overrides."""
-    import os
-
-    mode = os.environ.get("NIMBUS_ROUND_MAT", "eager")
-    if mode == "persist":
-        return df.persist()
-    return df.localCheckpoint(eager=(mode == "eager"))
 
 
 def _pkey(cfg: CrawlConfig):
@@ -126,21 +129,18 @@ def run_round(
 ) -> dict:
     """Execute round ``r``; commits atomically; returns progress stats.
 
-    NIMBUS_ROUND_TIMING=1 adds ``stage_secs`` to the returned stats: wall
-    time between the round's materialization barriers (eager localCheckpoints
-    + the commit) — a driver-side stage profile with zero extra jobs."""
-    import os as _os
+    ``stage_secs`` in the returned stats is the wall time between the round's
+    materialization barriers (eager localCheckpoints + the commit) — a
+    driver-side stage profile with zero extra jobs."""
     import time as _time
 
-    _timing = _os.environ.get("NIMBUS_ROUND_TIMING", "0") == "1"
     stage_secs: dict = {}
     _tick_last = [_time.perf_counter()]
 
     def _tick(label: str) -> None:
-        if _timing:
-            now = _time.perf_counter()
-            stage_secs[label] = round(now - _tick_last[0], 2)
-            _tick_last[0] = now
+        now = _time.perf_counter()
+        stage_secs[label] = round(now - _tick_last[0], 2)
+        _tick_last[0] = now
 
     state = store.read("url_state")
     domains = store.read("domains")
@@ -174,24 +174,17 @@ def run_round(
     if frontier_pending is None:
         frontier_pending = frontier.count()
     if frontier_pending == 0:
-        store.commit(
-            r,
-            meta={
-                "frontier_pending": 0,
-                "frontier_pending_after": 0,
-                "scheduled": 0,
-                "fetched": 0,
-                "fetched_total": fetched_total,
-                "config_hash": cfg.config_hash(),
-            },
-        )
-        return {
+        stats = {
             "frontier_pending": 0,
             "frontier_pending_after": 0,
             "scheduled": 0,
             "fetched": 0,
             "fetched_total": fetched_total,
         }
+        marker = store.commit(r, meta={**stats, "config_hash": cfg.config_hash()})
+        _tick("commit")
+        stats["stage_secs"] = {**stage_secs, "commit_sub": marker["meta"]["commit_sub_secs"]}
+        return stats
 
     backpressured = (
         cfg.frontier_backpressure is not None and frontier_pending > cfg.frontier_backpressure
@@ -213,7 +206,11 @@ def run_round(
             "_age_rank",
             num_partitions=cfg.shuffle_partitions,
         )
-        trimmed = _mat(ranked.where(F.col("_age_rank") < n_drop).drop("_age_rank"))
+        trimmed = (
+            ranked.where(F.col("_age_rank") < n_drop)
+            .drop("_age_rank")
+            .localCheckpoint(eager=True)
+        )
         frontier = ranked.where(F.col("_age_rank") >= n_drop).drop("_age_rank")
 
     eligible = frontier.where(
@@ -232,11 +229,9 @@ def run_round(
     if new_pkeys.isEmpty():
         domains_all = domains
     else:
-        domains_all = _mat(
-            domains.unionByName(
-                discover_domains(eligible.select("pkey"), domains, pages, cfg, r)
-            )
-        )
+        domains_all = domains.unionByName(
+            discover_domains(eligible.select("pkey"), domains, pages, cfg, r)
+        ).localCheckpoint(eager=True)
     _tick("domains")
 
     # --- robots gate (F5), evaluated EXACTLY ONCE per round ------------------
@@ -257,17 +252,15 @@ def run_round(
         ),
         "pkey",
     )
-    gated = _mat(
-        base.withColumn(
-            "_allowed",
-            robots_allowed_udf("robots_body", "url")
-            if cfg.respect_robots_txt
-            else F.lit(True),
-        ).drop("robots_body")
-    )
+    gated = base.withColumn(
+        "_allowed",
+        robots_allowed_udf("robots_body", "url")
+        if cfg.respect_robots_txt
+        else F.lit(True),
+    ).drop("robots_body").localCheckpoint(eager=True)
 
     # --- politeness token bucket (O1/O2) ------------------------------------
-    selected_mat = politeness_select(
+    selected = politeness_select(
         gated.where(F.col("_allowed")),
         round_idx=r,
         round_ms=cfg.round_ms,
@@ -278,13 +271,8 @@ def run_round(
         # fast path = a filter over the gated cache (no extra barrier); the
         # rank path shuffles, so its output is checkpointed before the four
         # consumers below (fetch broadcast, clock, failed anti-join, delta)
-        materialize=_mat,
-    )
-    # keep the MATERIALIZED frame for the release loop below: unpersisting
-    # the .drop() derivative would leave the rank path's cached blocks live
-    # under NIMBUS_ROUND_MAT=persist (the fast path is a plain filter —
-    # unpersist on it is a no-op either way)
-    selected = selected_mat.drop("_allowed", "next_free_ms", "host_rank")
+        materialize=lambda df: df.localCheckpoint(eager=True),
+    ).drop("_allowed", "next_free_ms", "host_rank")
     _tick("select")
 
     # Robots-denied rows: the verdict is already a cached column, so the
@@ -316,7 +304,7 @@ def run_round(
     # and their parse output discarded — identical results, and the dup
     # fraction is bounded, while re-shuffling html to parse after the dedup
     # verdict would cost far more at scale.
-    ok_rows = _mat(
+    ok_rows = (
         fetched
         .withColumn("content_hash", F.sha2(F.col("html"), 256))
         .withColumn("html_bytes", F.length("html").cast("long"))
@@ -326,6 +314,7 @@ def run_round(
         .withColumn("text", F.col("_parsed.text"))
         .withColumn("links", F.col("_parsed.links"))
         .drop("_parsed", "html", "lang")
+        .localCheckpoint(eager=True)
     )
     _tick("fetch_parse")
 
@@ -371,12 +360,13 @@ def run_round(
         prior_dup = F.col("_prior_dup").isNotNull()
     else:
         prior_dup = F.lit(False)
-    flags = _mat(
+    flags = (
         ranked.withColumn(
             "dup_content",
             (F.struct("depth", "seq") > F.col("_first")) | prior_dup,
         )
         .select("url", "crawl_seq", "dup_content")
+        .localCheckpoint(eager=True)
     )
     _tick("rank_dedup")
     # cheap map-side stitch of two cached sets — consumers re-join from
@@ -456,7 +446,11 @@ def run_round(
         # materialized once: consumed by BOTH the url_state merge and the
         # seen_filter incremental update (otherwise the explode→dedup→bloom
         # pipeline runs twice)
-        children = _mat(_with_keys(children, cfg.state_buckets).select(*_STATE_COLS))
+        children = (
+            _with_keys(children, cfg.state_buckets)
+            .select(*_STATE_COLS)
+            .localCheckpoint(eager=True)
+        )
         _tick("children")
 
     # --- state updates (U1-U6) ----------------------------------------------
@@ -589,13 +583,7 @@ def run_round(
         "n_rows": F.count(F.lit(1)),
         "n_children": F.count(F.when(F.col("discovered_round") == r, 1)),
         "n_pending_now": F.count(F.when(F.col("status").isin("pending", "crawling"), 1)),
-        "n_fetched": F.count(
-            F.when(
-                (F.col("status") == "parsed")
-                | ((F.col("status") == "skipped") & F.col("html_key").isNotNull()),
-                1,
-            )
-        ),
+        "n_fetched": F.count(F.when(fetched_ok(), 1)),
         "n_failed": F.count(F.when(F.col("status").isin("crawling", "failed"), 1)),
     }
 
@@ -624,17 +612,6 @@ def run_round(
         merge_metrics={"url_state": metric_exprs},
         meta_fn=finalize,
     )
-    # release round-scoped storage so executor memory is per-round, not
-    # accumulating across a long crawl. NOTE: this frees blocks eagerly only
-    # under NIMBUS_ROUND_MAT=persist (unpersist drops CacheManager entries);
-    # localCheckpoint-backed frames (eager/lazy modes) hold their blocks
-    # until the checkpointed RDDs are GC'd on the driver — the ContextCleaner
-    # then drops them asynchronously, which bounds storage across a long
-    # crawl without an explicit release hook.
-    for _df in (domains_all, gated, selected_mat, ok_rows, flags, children, trimmed):
-        if _df is not None:
-            _df.unpersist()
-
     _tick("commit")
 
     fm = marker["meta"]
@@ -644,11 +621,8 @@ def run_round(
         "scheduled": fm["scheduled"],
         "fetched": fm["fetched"],
         "fetched_total": fm["fetched_total"],
+        "stage_secs": {**stage_secs, "commit_sub": fm["commit_sub_secs"]},
     }
-    if _timing:
-        stats["stage_secs"] = stage_secs
-        if "commit_sub_secs" in fm:
-            stats["stage_secs"]["commit_sub"] = fm["commit_sub_secs"]
     if fm["scheduled"] == 0 and fm["frontier_pending_after"] > 0:
         # pure wait round (every pending URL is backing off): tell the loop
         # how far to fast-forward — rounds in (r, min_next) are provably

@@ -123,9 +123,6 @@ def main() -> None:
     wh = tempfile.mkdtemp(prefix=f"nimbus-scale-{cores}-", dir=base)
     shutil.rmtree(wh, ignore_errors=True)
     shutil.copytree(template, wh)
-    # stage profile rides every sample: driver-side perf_counter ticks around
-    # the round's existing materialization barriers — zero extra Spark jobs
-    os.environ.setdefault("NIMBUS_ROUND_TIMING", "1")
     steal0 = _steal_jiffies()
     r = bench_mega_round(spark, pages_path, wh)
     # hypervisor steal accumulated DURING the timed round — the evidence
@@ -138,8 +135,7 @@ def main() -> None:
         # high pages/sec on identical input), so the sample only needs to be
         # large enough to dominate fixed latency — at d200 the full 1-in-3
         # sample cost ~170 s per 2-core probe, a budget killer
-        mod = int(os.environ.get("NIMBUS_SCALE_PARSE_MOD", "8"))
-        out["parse"] = bench_parse_stage(spark, pages_path, sample_mod=mod)
+        out["parse"] = bench_parse_stage(spark, pages_path, sample_mod=8)
     spark.stop()
     print(json.dumps(out))
 

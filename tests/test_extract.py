@@ -236,7 +236,7 @@ class TestFastTokenizerEquivalence:
         # optimization silently evaporates
         assert accepted / len(corpus.pages) > 0.95
 
-    def test_public_api_equivalence_both_flags(self, monkeypatch):
+    def test_public_api_equivalence_with_stdlib_tree(self):
         import nimbus_crawler_spark.functions.extract as ex
 
         html = (
@@ -247,9 +247,7 @@ class TestFastTokenizerEquivalence:
         )
         base = "https://h.example/p"
         fast = (ex.extract_text(html), ex.extract_links(html, base))
-        monkeypatch.setattr(ex, "_FAST_HTML", False)
-        slow = (ex.extract_text(html), ex.extract_links(html, base))
-        assert fast == slow
+        assert fast == ex._page_from_tree(ex._stdlib_tree(html), base)
 
     def test_hypothesis_fuzz(self):
         from hypothesis import given, settings
@@ -287,26 +285,37 @@ class TestFastTokenizerEquivalence:
         check()
 
 
+BASE = "https://h.example/dir/page"
+
+
+def _assert_page_matches_tree(html: str):
+    """parse_page (streaming hot path + tree fallback) ≡ the stdlib tree path
+    on text AND links, and the fused kernel refuses exactly the inputs the
+    tree tokenizer refuses."""
+    import nimbus_crawler_spark.functions.extract as ex
+
+    fast = ex.parse_page(html, BASE)
+    slow = ex._page_from_tree(ex._stdlib_tree(html), BASE)
+    assert fast == slow, repr(html)
+    refused = ex._stream_parse(html) is None
+    assert refused == (not ex._fast_feed(ex._TreeBuilder(), html)), repr(html)
+
+
+def _corpus_html(seed: int):
+    from nimbus_crawler_spark.sources.corpus import make_corpus
+
+    corpus = make_corpus(seed=seed, n_hosts=6, pages_per_host=10, heavy_dom=25)
+    for page in corpus.pages:
+        html = page["html"]
+        if isinstance(html, (bytes, bytearray)):
+            html = bytes(html).decode("utf-8", errors="replace")
+        yield html
+
+
 class TestStreamingParsePageEquivalence:
     """parse_page's streaming hot path must equal the stdlib tree path —
     text AND links — on everything it accepts; off-domain input must reach
     the tree fallback transparently."""
-
-    BASE = "https://h.example/dir/page"
-
-    @staticmethod
-    def _both(html: str):
-        import nimbus_crawler_spark.functions.extract as ex
-
-        old = ex._FAST_HTML
-        try:
-            ex._FAST_HTML = True
-            fast = ex.parse_page(html, TestStreamingParsePageEquivalence.BASE)
-            ex._FAST_HTML = False
-            slow = ex.parse_page(html, TestStreamingParsePageEquivalence.BASE)
-        finally:
-            ex._FAST_HTML = old
-        return fast, slow
 
     def test_adversarial_vectors(self):
         vectors = TestFastTokenizerEquivalence.ADVERSARIAL + [
@@ -331,29 +340,22 @@ class TestStreamingParsePageEquivalence:
             "no body at all <a href='/z'>link</a>",
             "<BODY>upper</BODY>",
             "<body class='c'>attrs on body</body>",
+            "<body><a href='/1' HREF='/2'>first href wins</a><a name=n href>bare</a></body>",
         ]
         for html in vectors:
-            fast, slow = self._both(html)
-            assert fast == slow, html
+            _assert_page_matches_tree(html)
 
     def test_corpus_pages_and_streaming_engages(self):
-        import nimbus_crawler_spark.functions.extract as ex
-        from nimbus_crawler_spark.sources.corpus import make_corpus
+        from nimbus_crawler_spark.functions.extract import _stream_parse
 
-        corpus = make_corpus(seed=29, n_hosts=6, pages_per_host=10, heavy_dom=25)
         streamed = n_html = 0
-        for page in corpus.pages:
-            html = page["html"]
-            h = bytes(html).decode("utf-8", errors="replace") if isinstance(
-                html, (bytes, bytearray)
-            ) else html
+        for h in _corpus_html(seed=29):
             if "<body" in h:  # robots.txt / binary rows have no body → tree path
                 n_html += 1
-                se = ex._StreamExtractor()
-                if ex._fast_feed(se, h) and se.bodies:
+                sp = _stream_parse(h)
+                if sp is not None and sp[0]:
                     streamed += 1
-            fast, slow = self._both(h)
-            assert fast == slow
+            _assert_page_matches_tree(h)
         assert n_html > 0 and streamed / n_html > 0.95
 
     def test_hypothesis_fuzz(self):
@@ -374,49 +376,23 @@ class TestStreamingParsePageEquivalence:
         @settings(max_examples=400, deadline=None)
         @given(st.lists(frag, min_size=0, max_size=20))
         def check(parts):
-            html = "".join(parts)
-            fast, slow = self._both(html)
-            assert fast == slow, repr(html)
+            _assert_page_matches_tree("".join(parts))
 
         check()
 
 
 class TestFusedStreamParse:
-    """The fused single-loop ``_stream_parse`` (round-6 hot path) must be
-    event-for-event identical to the class pipeline it replaced
-    (``_fast_feed`` driving ``_StreamExtractor``): same accept/refuse
-    decision, same bodies, same hrefs."""
-
-    @staticmethod
-    def _both(html: str):
-        import nimbus_crawler_spark.functions.extract as ex
-
-        se = ex._StreamExtractor()
-        ok = ex._fast_feed(se, html)
-        cls_out = (se.bodies, se.hrefs) if ok else None
-        fused = ex._stream_parse(html)
-        return cls_out, fused
-
-    def _assert_same(self, html: str):
-        cls_out, fused = self._both(html)
-        if cls_out is None:
-            assert fused is None, repr(html)
-        else:
-            assert fused == cls_out, repr(html)
+    """The fused single-loop ``_stream_parse`` (the parse hot path), pinned
+    straight against the stdlib tree path through ``parse_page``: same
+    accept/refuse decision as the tree tokenizer, same text, same links."""
 
     def test_adversarial_vectors(self):
         for html in TestFastTokenizerEquivalence.ADVERSARIAL:
-            self._assert_same(html)
+            _assert_page_matches_tree(html)
 
     def test_corpus_pages(self):
-        from nimbus_crawler_spark.sources.corpus import make_corpus
-
-        corpus = make_corpus(seed=31, n_hosts=6, pages_per_host=10, heavy_dom=25)
-        for page in corpus.pages:
-            html = page["html"]
-            if isinstance(html, (bytes, bytearray)):
-                html = bytes(html).decode("utf-8", errors="replace")
-            self._assert_same(html)
+        for html in _corpus_html(seed=31):
+            _assert_page_matches_tree(html)
 
     def test_hypothesis_raw_char_fuzz(self):
         from hypothesis import given, settings
@@ -425,7 +401,7 @@ class TestFusedStreamParse:
         @settings(max_examples=600, deadline=None)
         @given(st.text(alphabet="<>/='\"ab x&;#!-\n\t", max_size=40))
         def check(html):
-            self._assert_same(html)
+            _assert_page_matches_tree(html)
 
         check()
 
@@ -447,6 +423,6 @@ class TestFusedStreamParse:
         @settings(max_examples=400, deadline=None)
         @given(st.lists(frag, min_size=0, max_size=20))
         def check(parts):
-            self._assert_same("".join(parts))
+            _assert_page_matches_tree("".join(parts))
 
         check()

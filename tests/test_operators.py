@@ -31,6 +31,17 @@ def _jaccard(a, b):
     return (len(a & b) / len(u)) if u else 1.0
 
 
+def _physical_plan(df) -> str:
+    """Physical plan text (``explain()`` simple mode: one operator a line)."""
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
 class TestExactDedup:
     def test_groups(self, spark, docs):
         from nimbus_crawler_spark.operators.textdedup import exact_dedup_groups
@@ -40,9 +51,9 @@ class TestExactDedup:
         assert got[1] == 1
 
     def test_keep_first(self, spark, docs):
-        from nimbus_crawler_spark.operators.textdedup import exact_dedup_keep_first
+        from nimbus_crawler_spark.operators.textdedup import first_wins
 
-        kept = {r["doc_id"] for r in exact_dedup_keep_first(docs).collect()}
+        kept = {r["doc_id"] for r in first_wins(docs, F.md5("text")).collect()}
         assert 0 in kept and 3 not in kept
         assert kept == {0, 1, 2, 4, 5}
 
@@ -63,11 +74,11 @@ class TestMinhash:
         assert not any({a, b} == {0, 2} for a, b in pairs)
 
     def test_signature_shape(self, spark, docs):
-        from nimbus_crawler_spark.operators.textdedup import minhash_signatures
+        from nimbus_crawler_spark.operators.textdedup import minhash_signatures_wide
 
-        sigs = minhash_signatures(docs.where("doc_id in (0,2)"), num_hashes=8).collect()
-        assert len(sigs) == 16  # 2 docs × 8 perms
-        assert all(len(r["sig"]) == 32 for r in sigs)  # md5 hex
+        sigs = minhash_signatures_wide(docs.where("doc_id in (0,2)"), num_hashes=8).collect()
+        assert len(sigs) == 2  # one row per doc
+        assert all(len(r[f"s{i}"]) == 32 for r in sigs for i in range(8))  # md5 hex
 
 
 class TestSimhash:
@@ -254,6 +265,50 @@ class TestTextstats:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = sorted(r["doc_id"] for r in curation_pipeline(df).collect())
         assert got == [0, 5]
+
+    def test_curation_plan_evaluates_regex_forest_once(self, spark):
+        """The ``rand()`` pushdown barrier in curation_pipeline keeps the
+        gate Filter ABOVE the heavy scoring Project. Without it Catalyst
+        substitutes the aliases into a pushed Filter and every
+        regexp_extract_all runs twice (once in the Filter, once in the
+        Project) — a ~2x stage-time loss that no result check can see."""
+        from nimbus_crawler_spark.operators.textstats import curation_pipeline
+
+        df = spark.createDataFrame(
+            [(i, f"the quick brown fox {i} and the lazy dog") for i in range(8)],
+            "doc_id long, text string",
+        )
+        plan = _physical_plan(curation_pipeline(df))
+        regex_ops = [ln.strip() for ln in plan.splitlines() if "regexp_extract_all" in ln]
+        assert len(regex_ops) == 1, regex_ops
+        assert regex_ops[0].startswith("+- Project"), regex_ops[0]
+
+    def test_constant_windows_plan_to_single_partition(self, spark):
+        """The post-limit rank windows partition by ``pmod(<col>, 1)``: a
+        constant key the optimizer cannot fold away. They must stay one
+        Window over the limit's single partition — no Exchange between the
+        Window and TakeOrderedAndProject, one output partition, and a
+        non-empty partition spec (an unpartitioned Window would log the
+        WindowExec single-partition warning)."""
+        import re
+
+        from nimbus_crawler_spark.operators.indexing import bm25_topk, bpe_pair_counts
+        from nimbus_crawler_spark.operators.textstats import term_stats
+
+        df = spark.createDataFrame(
+            [(i, f"cat dog w{i % 3} cat") for i in range(12)], "doc_id long, text string"
+        )
+        for out in (
+            term_stats(df, top_k=3),
+            bpe_pair_counts(df, top_k=3),
+            bm25_topk(df, "cat dog", k=5),
+        ):
+            plan = _physical_plan(out)
+            span = plan[plan.index("Window ") : plan.index("TakeOrderedAndProject")]
+            assert "Exchange" not in span, plan
+            # Window [exprs], [partition spec], [order spec]
+            assert re.search(r"\], \[\w+#\d+L?\], \[", span.splitlines()[0]), plan
+            assert out.rdd.getNumPartitions() == 1
 
 
 class TestMultimodal:
@@ -877,6 +932,24 @@ class TestIndexing:
         with pytest.raises(ValueError):
             bm25_topk(docs, "   ")
 
+    def test_bm25_topk_null_and_string_ids(self, spark):
+        """The rank window's constant key must not depend on the id's value
+        or type: a null id and a string id column both yield ONE 1..k rank
+        sequence, in score order."""
+        from nimbus_crawler_spark.operators.indexing import bm25_topk
+
+        texts = ["cat dog cat", "dog dog dog dog", "cat fish", "bird cat"]
+        for schema, ids in (
+            ("doc_id long, text string", [None, 1, 2, 3]),
+            ("doc_id string, text string", ["d0", "d1", "d2", "d3"]),
+        ):
+            docs = spark.createDataFrame(list(zip(ids, texts)), schema)
+            got = bm25_topk(docs, "cat dog", k=10).collect()
+            assert len(got) == 4
+            assert [r["rank"] for r in got] == [1, 2, 3, 4]
+            scores = [r["score"] for r in got]
+            assert scores == sorted(scores, reverse=True)
+
 
 class TestHistograms:
     """metric_histogram / quality_histogram (textstats): distribution
@@ -1324,7 +1397,6 @@ class TestR6OptimizationInternals:
         from pyspark.sql import functions as F
 
         from nimbus_crawler_spark.operators.textdedup import (
-            _materialize,
             simhash_fingerprints,
             simhash_near_pairs,
         )
@@ -1337,7 +1409,7 @@ class TestR6OptimizationInternals:
         assert len(got) == len(set(got))
 
         # reference: the pre-r6 shape — band join, distinct, hamming filter
-        fps = _materialize(simhash_fingerprints(docs, bits=bits))
+        fps = simhash_fingerprints(docs, bits=bits).localCheckpoint(eager=True)
         band_bits = bits // bands
         mask = (1 << band_bits) - 1
         bstructs = F.array(*[

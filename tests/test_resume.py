@@ -68,10 +68,12 @@ def test_uncommitted_round_data_is_ignored(spark, small, lossless_final, tmp_pat
     assert _final_state(spark, str(wh))[0] == lossless_final[0]
 
 
-def test_commit_marker_contents(spark, small, tmp_path):
+def test_commit_marker_contents(spark, small, tmp_path, monkeypatch):
+    # stage timings are always on: no env switch is needed (or read)
+    monkeypatch.delenv("NIMBUS_ROUND_TIMING", raising=False)
     corpus, pages = small
     wh = str(tmp_path / "meta")
-    crawl(spark, wh, pages, corpus.seeds_text, CrawlConfig(), max_rounds=2)
+    summary = crawl(spark, wh, pages, corpus.seeds_text, CrawlConfig(), max_rounds=2)
     store = SnapshotStore(spark, wh)
     c = store.latest_commit()
     assert c["round"] == 1
@@ -82,7 +84,39 @@ def test_commit_marker_contents(spark, small, tmp_path):
     commits = sorted((tmp_path / "meta" / "_commits").glob("c*.json"))
     assert len(commits) == 3  # seed + 2 rounds
     for p in commits:
-        json.loads(p.read_text())
+        meta = json.loads(p.read_text())["meta"]
+        assert {"delta", "writes", "stats"} <= set(meta["commit_sub_secs"]), p.name
+    assert len(summary.round_stats) == 2
+    for st in summary.round_stats:
+        stages = st["stage_secs"]
+        assert {"domains", "select", "fetch_parse", "rank_dedup", "commit"} <= set(stages)
+        assert {"delta", "writes", "stats"} <= set(stages["commit_sub"])
+
+
+def test_resume_without_fetched_total_counts_content_dups(
+    spark, small, lossless_final, tmp_path
+):
+    """A marker without ``fetched_total`` makes resume derive it from state.
+    Content-dup rows (``skipped`` with an ``html_key``) were fetched too, so
+    they must count: an undercount re-issues crawl_seq values."""
+    corpus, pages = small
+    cfg = CrawlConfig(round_ms=4000)
+    wh = tmp_path / "no_ft"
+    crawl(spark, str(wh), pages, corpus.seeds_text, cfg, max_rounds=3)
+    state = SnapshotStore(spark, str(wh)).read("url_state")
+    # the cut must come after content dups were fetched, or nothing is tested
+    assert state.where("status = 'skipped' AND html_key IS NOT NULL").count() > 0
+
+    last = sorted((wh / "_commits").glob("c*.json"))[-1]
+    marker = json.loads(last.read_text())
+    del marker["meta"]["fetched_total"]
+    last.write_text(json.dumps(marker))
+
+    crawl(spark, str(wh), pages, None, cfg, max_rounds=60, resume=True)
+    final = _final_state(spark, str(wh))
+    seqs = [seq for seq, _url in final[1]]
+    assert len(seqs) == len(set(seqs))
+    assert final == lossless_final
 
 
 def _mk_state(spark, urls, status="pending", buckets=32):
