@@ -594,7 +594,7 @@ def _q_canonicalize(spark, sf_dir):
     _ensure(spark)
     from nimbus_crawler_spark.functions.udfs import canonicalize_udf
 
-    docs = _spread_t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", canonicalize_udf(_messy_url()).alias("canonical_url")
     )

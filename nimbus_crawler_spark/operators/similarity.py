@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nimbus_crawler_spark.operators.textdedup import _band_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -150,23 +152,11 @@ def embedding_cosine_pairs(
     candidate set only. The standard random-hyperplane LSH trade: pairs whose
     signs differ in every band are missed; recall rises with ``bands`` and
     falls with ``bits``. All JVM-side expressions, deterministic, and the
-    oracle mirrors the banded algorithm exactly."""
+    oracle mirrors the banded algorithm exactly. The bucket self-join is the
+    dedup operators' ``_band_pairs`` (each candidate pair emitted once)."""
     v = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                sign_bucket(F.col("_v"), bits, offset=j * bits).alias("bk"),
-            )
-            for j in range(bands)
-        ]
-    )
-    banded = v.select("_id", F.explode(band_structs).alias("_b")).select(
-        "_id", F.col("_b.band").alias("band"), F.col("_b.bk").alias("bk")
-    )
-    a = banded.select(F.col("_id").alias("a"), "band", "bk")
-    b = banded.select(F.col("_id").alias("b"), "band", "bk")
-    cand = a.join(b, ["band", "bk"]).where(F.col("a") < F.col("b")).select("a", "b").distinct()
+    keys = [sign_bucket(F.col("_v"), bits, offset=j * bits) for j in range(bands)]
+    cand = _band_pairs(v, "_id", keys)
     pa = v.select(F.col("_id").alias("a"), F.col("_v").alias("_va"))
     pb = v.select(F.col("_id").alias("b"), F.col("_v").alias("_vb"))
     return (

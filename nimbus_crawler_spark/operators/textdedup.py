@@ -10,23 +10,26 @@ operator has a DuckDB-checkable SQL oracle in ``__spark_entry__.py``.
 Scale notes (the point of each design):
 * exact dedup — one shuffle on the 128-bit content hash; at 100 TB this is
   the cheapest possible grouping key and AQE handles hash skew (empty docs).
+* one shingle pass — ``shingle_sets`` builds each document's distinct
+  shingle set once; MinHash signing, n-gram candidate generation and exact
+  Jaccard verification all read that table.
 * MinHash: signatures are ``min(md5(i||':'||shingle))`` per permutation i —
   a min-aggregate per (doc, i), so map-side partial aggregation does almost
-  all the work before the shuffle. LSH banding turns all-pairs O(n²) into
-  per-bucket candidate generation; candidate verification joins are bounded
-  by bucket sizes, not corpus size.
+  all the work before the shuffle.
 * SimHash: 32-bit fingerprint via per-hex-char votes — a single groupBy(doc)
-  aggregation; Hamming-near pairs then join on band keys, never all-pairs.
-* shingle Jaccard — exact verification restricted to candidate pairs.
+  aggregation.
+* one banded core — MinHash LSH, SimHash and the embedding sign-LSH
+  (``similarity.embedding_cosine_pairs``) all call ``_band_pairs``: one
+  (band, key) self-join that emits each pair once, from its lowest agreeing
+  band, so candidate generation is bounded by bucket sizes, not corpus size,
+  and needs no ``distinct``.
 * compute-once pins — a subtree consumed by MULTIPLE downstream branches
   (both sides of a self-join, candidate generation + verify) is
   ``localCheckpoint(eager=True)``'d. Without it Spark plans the subtree once
-  per consumer; static exchange reuse only collapses canonically-identical
-  exchanges, and the verified r2 plans showed the SimHash fingerprint
-  aggregation executed per band side (8×) and the MinHash signature
-  aggregation per self-join side (2×). The pinned tables are small (one row
-  per document or per shingle), so every consumer plans against the stored
-  result instead.
+  per consumer: static exchange reuse only collapses canonically-identical
+  exchanges, so the signature aggregation would run once per join side. The
+  pinned tables are small (one row per document or per shingle), so every
+  consumer plans against the stored result instead.
 """
 
 from __future__ import annotations
@@ -114,38 +117,110 @@ def first_wins(df: DataFrame, key: Column | str, id_col: str = "doc_id") -> Data
     )
 
 
-def minhash_signatures_wide(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, s0..s{k-1}): per-permutation min signatures, one column each.
+def _check_banding(bands: int, width: int, exact: bool) -> int:
+    """Rows (or bits) per band. Rejects band parameters that silently break
+    the result: more bands than signature entries gives empty band keys that
+    put every pair in one bucket, and MinHash bands must tile the signature
+    exactly (``exact``), as the oracle's ``perm // rows_per_band`` does."""
+    if not 1 <= bands <= width:
+        raise ValueError(f"bands must be in 1..{width}, got {bands}")
+    if exact and width % bands:
+        raise ValueError(f"num_hashes={width} is not a multiple of bands={bands}")
+    return width // bands
 
-    Single-pass shape for scale: ONE row per (doc, shingle) carrying the
-    k-element hash array (computed map-side by ``transform``), then one
-    groupBy(doc) with k elementwise ``min`` aggregates — map-side partial
-    aggregation shrinks the shuffle to one row per (doc, partition), k× fewer
-    pre-shuffle rows than the explode-perms formulation.
+
+def _band_pairs(
+    rows: DataFrame, id_col: str, keys: list[Column], carry: str | None = None
+) -> DataFrame:
+    """(a, b[, <carry>_a, <carry>_b]): every pair a < b of ``rows`` whose band
+    keys agree in at least one band, each pair exactly once — the one banded
+    self-join behind MinHash LSH, SimHash and embedding sign-LSH.
+
+    The keyed table is pinned once, so the signature work under it runs once
+    rather than once per join side. A pair agreeing in k bands would meet k
+    times in the (band, key) join; the join keeps only the match from its
+    lowest agreeing band (every lower band's key differs), so no ``distinct``
+    exchange is needed. Both sides carry the lower bands' keys for that
+    check as plain columns (an array column measured ~15% slower on the
+    SimHash join at sf0.1 on 4 cores)."""
+    extra = [carry] if carry else []
+    n = len(keys)
+    keyed = rows.select(
+        F.col(id_col).alias("_id"), *extra, *[k.alias(f"_k{j}") for j, k in enumerate(keys)]
+    ).localCheckpoint(eager=True)
+    banded = keyed.select(
+        "*", F.posexplode(F.array(*[f"_k{j}" for j in range(n)])).alias("_band", "_key")
+    )
+
+    carried = [f"_k{j}" for j in range(n - 1)] + extra
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col("_id").alias(s), "_band", "_key", *[F.col(c).alias(f"{c}_{s}") for c in carried]
+        )
+
+    cond = F.col("a") < F.col("b")
+    for j in range(n - 1):
+        cond = cond & ((F.col("_band") <= j) | (F.col(f"_k{j}_a") != F.col(f"_k{j}_b")))
+    return (
+        side("a").join(side("b"), ["_band", "_key"])
+        .where(cond)
+        .select("a", "b", *[f"{c}_{s}" for c in extra for s in "ab"])
+    )
+
+
+def shingle_sets(
+    docs: DataFrame, shingle_n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(_id, _sh, _n_sh): distinct-shingle set per document — the one
+    shingle pass that candidate generation and exact verification share.
+    A caller that reads it more than once pins it; a single reader (LSH
+    candidates alone) streams it into the signature aggregation."""
+    return (
+        _spread(docs)
+        .select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+        )
+        .withColumn("_n_sh", F.size("_sh"))
+    )
+
+
+def minhash_signatures_wide(sets: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(_id, s0..s{k-1}): per-permutation min signatures of a ``shingle_sets``
+    table, one column each.
+
+    ONE row per (doc, shingle) carries the k-element hash array (computed
+    map-side by ``transform``), then one groupBy(doc) with k elementwise
+    ``min`` aggregates — map-side partial aggregation shrinks the shuffle to
+    one row per (doc, partition), k× fewer pre-shuffle rows than exploding
+    the permutations.
 
     String-min over md5 hex is a valid permutation proxy (uniform order on
     shingles) and — unlike xxhash64/murmur — is bit-identical across engines,
     which keeps the operator oracle-checkable.
     """
-    sh = _spread(docs).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles(F.col(text_col), shingle_n))).alias("shingle"),
-    )
     hashes = F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda p: F.md5(F.concat_ws(":", p, F.col("shingle"))),
     )
     return (
-        sh.select(id_col, hashes.alias("_hs"))
-        .groupBy(id_col)
+        sets.select("_id", F.explode("_sh").alias("shingle"))
+        .select("_id", hashes.alias("_hs"))
+        .groupBy("_id")
         .agg(*[F.min(F.element_at("_hs", i + 1)).alias(f"s{i}") for i in range(num_hashes)])
     )
+
+
+def _minhash_band_keys(num_hashes: int, bands: int) -> list[Column]:
+    """One LSH band key per band: md5 of the band's signatures in permutation
+    order, projected straight off the wide signature row (no second
+    aggregation)."""
+    r = _check_banding(bands, num_hashes, exact=True)
+    return [
+        F.md5(F.concat_ws(",", *[F.col(f"s{band * r + j}") for j in range(r)]))
+        for band in range(bands)
+    ]
 
 
 def minhash_lsh_candidates(
@@ -156,84 +231,26 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Candidate near-dup pairs (a < b) sharing ≥1 LSH band bucket.
-
-    Band keys are projected straight off the wide signature row (md5 of the
-    band's sigs in perm order) — no second aggregation shuffle; the only
-    shuffles are the signature groupBy and the bucket self-join. The wide
-    signature table is checkpointed once so the shingle-explode + k-min
-    aggregation — the dominant cost at corpus scale — is computed exactly
-    once, not once per self-join side."""
-    rows_per_band = num_hashes // bands
-    wide = minhash_signatures_wide(
-        docs, num_hashes, shingle_n, id_col, text_col
-    ).localCheckpoint(eager=True)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"s{band * rows_per_band + j}") for j in range(rows_per_band)]
-                    )
-                ).alias("band_key"),
-            )
-            for band in range(bands)
-        ]
-    )
-    band_keys = wide.select(id_col, F.explode(band_structs).alias("_bk")).select(
-        id_col, F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-    )
-    a = band_keys.select(F.col(id_col).alias("a"), "band", "band_key")
-    b = band_keys.select(F.col(id_col).alias("b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    """Candidate near-dup pairs (a < b) sharing ≥1 LSH band bucket, each once.
+    ``num_hashes`` must be a multiple of ``bands``."""
+    keys = _minhash_band_keys(num_hashes, bands)
+    sets = shingle_sets(docs, shingle_n, id_col, text_col)
+    return _band_pairs(minhash_signatures_wide(sets, num_hashes), "_id", keys)
 
 
-def shingle_sets(
-    docs: DataFrame, shingle_n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(_id, _sh, _n_sh): materialized distinct-shingle set per document —
-    computed once and shared by candidate generation and exact verification."""
-    return (
-        _spread(docs)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
-        )
-        .withColumn("_n_sh", F.size("_sh"))
-        .localCheckpoint(eager=True)
-    )
-
-
-def jaccard_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    threshold: float = 0.7,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sets: DataFrame | None = None,
-) -> DataFrame:
-    """Exact distinct-shingle Jaccard for candidate pairs: (a, b, jaccard).
-
-    ``sets`` (from ``shingle_sets``) shares one materialized shingle table
-    with the caller's candidate generation. A size-ratio prefilter runs
+def jaccard_verify(pairs: DataFrame, sets: DataFrame, threshold: float = 0.7) -> DataFrame:
+    """Exact distinct-shingle Jaccard for candidate pairs: (a, b, jaccard),
+    reading the caller's ``shingle_sets`` table. A size-ratio prefilter runs
     before the O(|set|) intersection: J(a,b) ≤ min(|A|,|B|)/max(|A|,|B|), so
     pairs whose set sizes alone rule out the threshold never pay for the
     array intersect — semantics-free (only provably-failing pairs drop)."""
-    sh = sets if sets is not None else shingle_sets(docs, shingle_n, id_col, text_col)
     j = (
         pairs.join(
-            sh.select(F.col("_id").alias("a"), F.col("_sh").alias("sh_a"), F.col("_n_sh").alias("n_a")),
+            sets.select(F.col("_id").alias("a"), F.col("_sh").alias("sh_a"), F.col("_n_sh").alias("n_a")),
             "a",
         )
         .join(
-            sh.select(F.col("_id").alias("b"), F.col("_sh").alias("sh_b"), F.col("_n_sh").alias("n_b")),
+            sets.select(F.col("_id").alias("b"), F.col("_sh").alias("sh_b"), F.col("_n_sh").alias("n_b")),
             "b",
         )
         .where(F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b"))
@@ -260,9 +277,12 @@ def minhash_dedup_pairs(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates → exact Jaccard verify."""
-    cands = minhash_lsh_candidates(docs, num_hashes, bands, shingle_n)
-    return jaccard_verify(cands, docs, threshold, shingle_n)
+    """Full near-dup pipeline: LSH candidates → exact Jaccard verify, both
+    reading one shingle pass."""
+    keys = _minhash_band_keys(num_hashes, bands)
+    sets = shingle_sets(docs, shingle_n).localCheckpoint(eager=True)
+    cands = _band_pairs(minhash_signatures_wide(sets, num_hashes), "_id", keys)
+    return jaccard_verify(cands, sets, threshold)
 
 
 def decontaminate(
@@ -311,8 +331,11 @@ def simhash_fingerprints(
 
     Bit j votes +1 if hex char j of md5(token) is in 8..f (top bit of the
     nibble), else −1; fingerprint bit j = 1 iff the vote sum is positive.
-    Portable across engines (md5 + substr + sum only). bits ≤ 32 (md5 hex len).
+    Portable across engines (md5 + substr + sum only). md5 hex has 32 chars,
+    so wider fingerprints would silently zero-fill: ``bits`` must be 1..32.
     """
+    if not 1 <= bits <= 32:
+        raise ValueError(f"bits must be in 1..32, got {bits}")
     tok = _spread(docs).select(
         F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("token")
     ).withColumn("h", F.md5("token"))
@@ -340,57 +363,19 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band join (pigeonhole: ≤max_hamming diffs
     over ``bands`` bands ⇒ some band equal when bands > max_hamming), then
-    exact Hamming verify via bit_count(xor).
-
-    The fingerprint table is checkpointed once; all band keys are projected
-    off it in ONE explode (mirroring the MinHash ``band_structs`` shape) —
-    the token-explode + vote aggregation, the dominant cost at corpus scale,
-    is computed exactly once rather than once per band side (8× in the
-    pre-materialization plan).
-
-    First-matching-band emission (r6): a pair agreeing in k bands used to be
-    emitted k times and collapsed by a ``distinct`` — on a near-dup-dense
-    corpus that exchange carried ~4× the result size (sf0.1: 3.3M result
-    pairs, ~13M emitted). Every band key is a pure function of the
-    fingerprint (``(simhash >> j·band_bits) & mask``), so the join can
-    require all LOWER bands to differ — each pair then leaves the join
-    exactly once (from its minimal agreeing band) and the distinct exchange
-    disappears from the plan. Result set is identical by construction."""
-    fps = simhash_fingerprints(docs, id_col, text_col, bits).localCheckpoint(eager=True)
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-
-    def band_key(fp: Column, j: int) -> Column:
-        return F.shiftright(fp, j * band_bits).bitwiseAND(F.lit(mask))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                band_key(F.col("simhash"), band).alias("band_key"),
-            )
-            for band in range(bands)
-        ]
-    )
-    banded = fps.select(
-        F.col(id_col), F.col("simhash"), F.explode(band_structs).alias("_bk")
-    ).select(
-        id_col, "simhash", F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-    )
-    a = banded.select(F.col(id_col).alias("a"), F.col("simhash").alias("sh_a"), "band", "band_key")
-    b = banded.select(F.col(id_col).alias("b"), F.col("simhash").alias("sh_b"), "band", "band_key")
-    # emit from the minimal agreeing band only: for every lower band j the
-    # two fingerprints' band keys must DIFFER (cheap bit math the optimizer
-    # folds into the join condition) — pairs are unique without a distinct
-    first_band = F.lit(True)
-    for j in range(bands - 1):
-        first_band = first_band & (
-            (F.col("band") <= F.lit(j))
-            | (band_key(F.col("sh_a"), j) != band_key(F.col("sh_b"), j))
-        )
+    exact Hamming verify via bit_count(xor). Band j's key is bit slice j of
+    the fingerprint, ``(simhash >> j·band_bits) & mask``; bits left over
+    when ``bands`` does not divide ``bits`` are in no band, which only
+    lowers the differing bits the bands see, so the pigeonhole still holds."""
+    fps = simhash_fingerprints(docs, id_col, text_col, bits)
+    band_bits = _check_banding(bands, bits, exact=False)
+    keys = [
+        F.shiftright("simhash", j * band_bits).bitwiseAND(F.lit((1 << band_bits) - 1))
+        for j in range(bands)
+    ]
     return (
-        a.join(b, ["band", "band_key"])
-        .where((F.col("a") < F.col("b")) & first_band)
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        _band_pairs(fps, id_col, keys, carry="simhash")
+        .withColumn("hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .where(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )
@@ -415,7 +400,7 @@ def ngram_jaccard_pairs(
     shingles are never candidates) — pass an ``Observation`` to surface the
     candidate-pair count on the consuming action (no extra job):
     ``obs.get["candidate_pairs"]`` after the result is materialized."""
-    sets = shingle_sets(docs, shingle_n, id_col, text_col)
+    sets = shingle_sets(docs, shingle_n, id_col, text_col).localCheckpoint(eager=True)
     sh = sets.select(F.col("_id").alias(id_col), F.explode("_sh").alias("shingle"))
     # Two-phase doc-frequency gate. Phase 1 is a plain count (partial-agg
     # friendly: map-side combine, constant memory per key) — crucially it runs
@@ -502,7 +487,7 @@ def ngram_jaccard_pairs(
         )
         .select("a", "b")
     )
-    return jaccard_verify(bounded, docs, threshold, shingle_n, id_col, text_col, sets=sets)
+    return jaccard_verify(bounded, sets, threshold)
 
 
 def remove_repeated_lines(

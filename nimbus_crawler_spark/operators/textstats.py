@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nimbus_crawler_spark.operators.textdedup import _spread, first_wins, shingles
+from nimbus_crawler_spark.operators.textdedup import _spread, _tokens, first_wins, shingles
 
 
 def round_half_up(col: Column, k: int) -> Column:
@@ -105,7 +105,7 @@ def _quality_feature_cols(t: Column) -> dict[str, Column]:
     """The rounded quality feature expressions, shared by ``quality_metrics``
     and ``curation_pipeline`` (which fuses them into one scan projection)."""
     n_tok = token_count(t)
-    toks = F.filter(F.split(F.lower(F.trim(t)), r"\s+"), lambda x: x != "")
+    toks = _tokens(t)
     n_distinct = F.size(F.array_distinct(toks))
     n_chars = F.length(t)
     n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
@@ -199,7 +199,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     shuffle, no UDF; fracs are HALF_UP-rounded to 4 dp for engine ≡ oracle
     comparison."""
     t = F.col(text_col)
-    toks = F.filter(F.split(F.lower(F.trim(t)), r"\s+"), lambda x: x != "")
+    toks = _tokens(t)
 
     def frac(num: Column, den: Column) -> Column:
         return round_half_up(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 4)
@@ -238,10 +238,8 @@ def term_stats(
     runs over the ≤ top_k surviving rows to stamp dense ranks, the same
     tiny-side-plan pattern as operators/ranking.py. Ties break by token
     ascending, so the result is deterministic and oracle-comparable."""
-    t = F.col(text_col)
-    toks = F.filter(F.split(F.lower(F.trim(t)), r"\s+"), lambda x: x != "")
     agg = (
-        _spread(docs).select(id_col, F.explode(toks).alias("token"))
+        docs.select(id_col, F.explode(_tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),

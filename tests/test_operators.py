@@ -74,11 +74,35 @@ class TestMinhash:
         assert not any({a, b} == {0, 2} for a, b in pairs)
 
     def test_signature_shape(self, spark, docs):
-        from nimbus_crawler_spark.operators.textdedup import minhash_signatures_wide
+        from nimbus_crawler_spark.operators.textdedup import minhash_signatures_wide, shingle_sets
 
-        sigs = minhash_signatures_wide(docs.where("doc_id in (0,2)"), num_hashes=8).collect()
+        sigs = minhash_signatures_wide(shingle_sets(docs.where("doc_id in (0,2)")), num_hashes=8).collect()
         assert len(sigs) == 2  # one row per doc
         assert all(len(r[f"s{i}"]) == 32 for r in sigs for i in range(8))  # md5 hex
+
+    def test_band_parameters_that_break_the_result_are_rejected(self, spark, docs):
+        from nimbus_crawler_spark.operators.textdedup import (
+            minhash_dedup_pairs,
+            minhash_lsh_candidates,
+            simhash_fingerprints,
+            simhash_near_pairs,
+        )
+
+        # more bands than hashes: every band key would be md5("") → all pairs
+        with pytest.raises(ValueError):
+            minhash_lsh_candidates(docs, num_hashes=2, bands=4)
+        # a partial last band would drop signatures the oracle bands on
+        with pytest.raises(ValueError):
+            minhash_lsh_candidates(docs, num_hashes=16, bands=3)
+        with pytest.raises(ValueError):
+            minhash_dedup_pairs(docs, num_hashes=16, bands=0)
+        # md5 hex has 32 chars: bit 32+ would be constant 0
+        with pytest.raises(ValueError):
+            simhash_fingerprints(docs, bits=40)
+        with pytest.raises(ValueError):
+            simhash_near_pairs(docs, bits=4, bands=8)
+        with pytest.raises(ValueError):
+            simhash_near_pairs(docs, bits=16, bands=0)
 
 
 class TestSimhash:
@@ -1432,6 +1456,45 @@ class TestR6OptimizationInternals:
         )
         assert set(got) == {(r["a"], r["b"], r["hamming"]) for r in ref}
 
+    def test_minhash_first_band_equals_distinct_formulation(self, spark):
+        from pyspark.sql import functions as F
+
+        from nimbus_crawler_spark.operators.textdedup import (
+            minhash_lsh_candidates,
+            minhash_signatures_wide,
+            shingle_sets,
+        )
+
+        docs = self._mk_docs(spark, seed=7)
+        k, bands, n = 16, 8, 2
+        res = minhash_lsh_candidates(docs, num_hashes=k, bands=bands, shingle_n=n)
+        got = [(r["a"], r["b"]) for r in res.collect()]
+        # no pair may be emitted twice (single emission replaced the distinct)
+        assert len(got) == len(set(got))
+        # and no aggregate runs above the pinned signature table
+        assert "Aggregate" not in _physical_plan(res)
+
+        # reference: band join + distinct over md5 band keys
+        sigs = minhash_signatures_wide(shingle_sets(docs, n), k).localCheckpoint(eager=True)
+        r = k // bands
+        bstructs = F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(F.concat_ws(",", *[F.col(f"s{b * r + j}") for j in range(r)])).alias("band_key"),
+            )
+            for b in range(bands)
+        ])
+        banded = sigs.select("_id", F.explode(bstructs).alias("_bk")).select(
+            "_id", F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
+        )
+        a = banded.select(F.col("_id").alias("a"), "band", "band_key")
+        b = banded.select(F.col("_id").alias("b"), "band", "band_key")
+        joined = a.join(b, ["band", "band_key"]).where(F.col("a") < F.col("b")).select("a", "b")
+        ref = {(row["a"], row["b"]) for row in joined.distinct().collect()}
+        assert set(got) == ref
+        # the corpus must hold pairs that agree in more than one band
+        assert joined.count() > len(ref)
+
     def test_ngram_prune_drops_nothing(self, spark):
         from pyspark.sql import functions as F
 
@@ -1460,7 +1523,7 @@ class TestR6OptimizationInternals:
         cands = (holders.select(F.explode(pair_structs).alias("_p"))
                  .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b")).distinct())
         ref = {(r["a"], r["b"], r["jaccard"]) for r in
-               jaccard_verify(cands, docs, thr, n, sets=sets).collect()}
+               jaccard_verify(cands, sets, thr).collect()}
         assert got == ref
 
     def test_cc_fused_init_random_graphs(self, spark):
